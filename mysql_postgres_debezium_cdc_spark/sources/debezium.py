@@ -53,6 +53,25 @@ def envelope_schema(row_schema: T.DataType) -> T.StructType:
     )
 
 
+def quote(name: str) -> str:
+    """Backtick-quoted SQL identifier, for names that are not bare words
+    (``kafka-offset``) or are reserved keywords (``table``)."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def ddl(dt: T.DataType) -> str:
+    """DDL type string of ``dt`` with every field name quoted, so it parses
+    back to ``dt`` even where a name is a reserved keyword under
+    spark.sql.ansi.enforceReservedKeywords (Debezium's ``source.table``)."""
+    if isinstance(dt, T.StructType):
+        return "struct<" + ",".join(f"{quote(f.name)}:{ddl(f.dataType)}" for f in dt.fields) + ">"
+    if isinstance(dt, T.ArrayType):
+        return f"array<{ddl(dt.elementType)}>"
+    if isinstance(dt, T.MapType):
+        return f"map<{ddl(dt.keyType)},{ddl(dt.valueType)}>"
+    return dt.simpleString()
+
+
 def decode_envelope(
     df: DataFrame,
     row_schema: T.DataType,
@@ -66,10 +85,11 @@ def decode_envelope(
     ``topic_col`` for the table-name fallback, and any passthrough
     columns (``offset`` etc.), which are preserved.
 
-    Output adds: op, before, after, src_db, src_table, ts_ms, _error
-    (non-null for malformed/unparseable records — the per-record error
-    isolation of Consumer.java:186-188 as a dead-letter column instead
-    of a log line).
+    Output adds: op, before, after, src_db, src_table, ts_ms, _tombstone,
+    _error (non-null for malformed/unparseable records — the per-record
+    error isolation of Consumer.java:186-188 as a dead-letter column
+    instead of a log line).  Input columns named ``_env``, ``_tombstone``
+    or ``_error`` are replaced, not duplicated.
     """
     schema = envelope_schema(row_schema)
     wrapped_schema = T.StructType([T.StructField("payload", schema)])
@@ -85,14 +105,19 @@ def decode_envelope(
     # would trip a codegen NPE in Spark 4.1 when the parse returns null —
     # branching between two whole-struct parses sidesteps it.)
     #
-    # r13 (guide §5): the decode tree ships as SQL strings — the DSL
-    # form paid one py4j round trip per operator across the whole CDC
-    # family's builds; scripts/ab_cdc_expr_r13.py proves the analyzed
-    # plans identical modulo expression ids (the parametric row schema
-    # rides as its DDL `simpleString`, which parses back to the same
-    # all-nullable StructType).
-    sch = schema.simpleString()
-    wsch = wrapped_schema.simpleString()
+    # The tree ships as SQL strings (a few py4j round trips per operator,
+    # not one per DSL function; the row schema rides as its quoted DDL,
+    # which parses back to the same all-nullable StructType).  It is
+    # evaluated ONCE per row behind a Generate, `explode(array(env))` over
+    # a one-element array: the optimizer inlines a projected expression
+    # into every consumer (each field projection, and the _error/op filter
+    # `with_change_columns` pushes down), which put five copies of the
+    # tree in the plan, but it cannot inline through a Generate, so every
+    # consumer reads `_env`.
+    # `array(x)` is never null, so dead-letter and tombstone rows (null
+    # `_env`) still come out.
+    sch = ddl(schema)
+    wsch = ddl(wrapped_schema)
     looks_wrapped = f"CONTAINS({value_col}, '\"payload\"')"
     parse_wrapped = f"from_json({value_col}, '{wsch}').payload"
     parse_bare = f"from_json({value_col}, '{sch}')"
@@ -102,19 +127,26 @@ def decode_envelope(
         f" CASE WHEN {looks_wrapped} THEN {parse_bare}"
         f" ELSE {parse_wrapped} END)"
     )
+    # `[.]` rather than `\\.`: a character class needs no backslash, so
+    # the literal means the same under spark.sql.parser.escapedStringLiterals.
     topic_table = (
-        f"element_at(split({topic_col}, '\\\\.'), -1)"
+        f"element_at(split({topic_col}, '[.]'), -1)"
         if topic_col and topic_col in df.columns
         else "CAST(NULL AS STRING)"
     )
-    out = df.withColumn("_env", F.expr(env)).selectExpr(
-        "*",
-        "_env.op AS op",
-        "_env.before AS before",
-        "_env.after AS after",
-        "_env.source.db AS src_db",
-        f"COALESCE(_env.source.table, {topic_table}) AS src_table",
-        "_env.ts_ms AS ts_ms",
+    # withColumn replaces an input column of the same name (`_env`,
+    # `_tombstone`, `_error`: e.g. a frame decoded once before) in place.
+    out = (
+        df.withColumn("_env", F.expr(f"explode(array({env}))"))
+        .selectExpr(
+            "*",
+            "_env.op AS op",
+            "_env.before AS before",
+            "_env.after AS after",
+            "_env.source.db AS src_db",
+            f"COALESCE(_env.source.`table`, {topic_table}) AS src_table",
+            "_env.ts_ms AS ts_ms",
+        )
     )
     # Tombstones (null/blank value, Consumer.java:133-136) are not errors;
     # anything else that yields no op is a poison record.  A PARSEABLE
@@ -130,14 +162,16 @@ def decode_envelope(
     # log line is this framework's strengthening of that contract.
     is_tombstone = f"(({value_col} IS NULL) OR (TRIM({value_col}) = ''))"
     return (
-        out.selectExpr("*", f"{is_tombstone} AS _tombstone")
-        .selectExpr(
-            "*",
-            f"CASE WHEN ((NOT {is_tombstone}) AND (op IS NULL)) THEN"
-            f" CONCAT('unparseable envelope: ', SUBSTRING({value_col}, 1, 120))"
-            f" WHEN ((NOT {is_tombstone}) AND"
-            f" (NOT (op IN ('c', 'r', 'u', 'd')))) THEN"
-            " CONCAT('unsupported op: ', op) END AS _error",
+        out.withColumn("_tombstone", F.expr(is_tombstone))
+        .withColumn(
+            "_error",
+            F.expr(
+                f"CASE WHEN ((NOT {is_tombstone}) AND (op IS NULL)) THEN"
+                f" CONCAT('unparseable envelope: ', SUBSTRING({value_col}, 1, 120))"
+                f" WHEN ((NOT {is_tombstone}) AND"
+                f" (NOT (op IN ('c', 'r', 'u', 'd')))) THEN"
+                " CONCAT('unsupported op: ', op) END"
+            ),
         )
         .drop("_env")
     )

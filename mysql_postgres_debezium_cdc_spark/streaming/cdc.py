@@ -37,6 +37,9 @@ from collections.abc import Sequence
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
+
+from mysql_postgres_debezium_cdc_spark.sources import debezium
 
 IS_DELETE = "_is_delete"
 ORDER_COL = "_cdc_offset"
@@ -49,14 +52,18 @@ def with_change_columns(
     """Normalize a decoded envelope frame: add _is_delete and _cdc_offset.
 
     op dispatch mirrors Consumer.java:174-185: c/r/u → upsert,
-    d → delete, anything else is dropped to the dead-letter filter."""
-    # r13 (guide §5): SQL strings, same trees (scripts/ab_cdc_expr_r13.py
-    # proves the analyzed plans identical modulo expression ids).
+    d → delete, anything else is dropped to the dead-letter filter.
+
+    Built as SQL strings (one py4j round trip per operator).  The filter
+    is pushed below the projections, down to the decode; on a frame from
+    `decode_envelope` it reads the `_env` attribute its Generate
+    produces, so it adds no JSON parse of its own.  ``offset_col`` is
+    backtick-quoted, so any column name works (``kafka-offset``)."""
     return (
         decoded.where("((_error IS NULL) AND (NOT _tombstone))")
         .where("op IN ('c', 'r', 'u', 'd')")
         .selectExpr("*", f"(op = 'd') AS {IS_DELETE}")
-        .selectExpr("*", f"CAST({offset_col} AS LONG) AS {ORDER_COL}")
+        .selectExpr("*", f"CAST({debezium.quote(offset_col)} AS LONG) AS {ORDER_COL}")
     )
 
 
@@ -87,7 +94,7 @@ def compact(batch: DataFrame, pk_cols: Sequence[str]) -> DataFrame:
         keyed.groupBy(*pk_aliases)
         .agg(
             F.expr(
-                f"MAX_BY(STRUCT({', '.join(others)}), {ORDER_COL}) AS _latest"
+                f"MAX_BY(STRUCT({', '.join(map(debezium.quote, others))}), {ORDER_COL}) AS _latest"
             )
         )
         .select(*pk_aliases, "_latest.*")
@@ -412,11 +419,9 @@ class CdcPipeline:
         self.sink = sink or ParquetStateSink(spark, state_root, pk_cols, row_cols)
 
     def decode(self, raw: DataFrame) -> DataFrame:
-        from mysql_postgres_debezium_cdc_spark.sources.debezium import decode_envelope
-
         topic = "topic" if "topic" in raw.columns else None
         return with_change_columns(
-            decode_envelope(raw, self.row_schema, topic_col=topic), self.offset_col
+            debezium.decode_envelope(raw, self.row_schema, topic_col=topic), self.offset_col
         )
 
     def process_batch(self, raw: DataFrame) -> None:
@@ -449,12 +454,15 @@ class MultiTableCdcRouter:
     tables fall through to the dead-letter side rather than failing the
     batch (Consumer.java:186-188 posture).
 
-    Physical shape per micro-batch: the mixed batch is decoded ONCE
-    with each table's schema applied to its own slice (filter on
-    ``src_table`` — a narrow predicate on an already-parsed column, so
-    the JSON parse is not repeated per table), then each slice runs the
-    standard compact→merge.  Per-table slices are independent — on a
-    cluster they run as parallel jobs off one cached batch.
+    Physical shape per micro-batch: the mixed batch's envelopes are
+    parsed ONCE, with the ``before``/``after`` row images kept as their
+    JSON text (``decode_envelope`` with a string row schema; Spark
+    returns a nested object as its text), and that one frame is
+    persisted.  Each table's slice (filter on the parsed ``src_table``)
+    then types only its own row images with its own schema and runs the
+    standard change-columns→compact→merge, so no table re-parses the
+    envelope.  Per-table slices are independent — on a cluster they run
+    as parallel jobs off the one cached frame.
     """
 
     def __init__(self, spark, config, table_specs, state_root: str):
@@ -475,24 +483,33 @@ class MultiTableCdcRouter:
                 os.path.join(state_root, target),
             )
 
+    @staticmethod
+    def _envelopes(raw: DataFrame) -> DataFrame:
+        """The one envelope parse of a mixed batch: op/source/ts_ms/
+        src_table resolved, row images left as JSON text."""
+        topic = "topic" if "topic" in raw.columns else None
+        return debezium.decode_envelope(raw, T.StringType(), topic_col=topic)
+
     def process_batch(self, raw: DataFrame) -> None:
-        raw = raw.persist()  # one materialization feeds every table slice
+        envelopes = self._envelopes(raw).persist()  # feeds every table slice
         try:
             for src_table, pipe in self.pipelines.items():
-                events = pipe.decode(raw).where(F.col("src_table") == src_table)
+                rows = debezium.ddl(pipe.row_schema)
+                typed = envelopes.where(F.col("src_table") == src_table).withColumns(
+                    {
+                        "before": F.expr(f"from_json(before, '{rows}')"),
+                        "after": F.expr(f"from_json(after, '{rows}')"),
+                    }
+                )
+                events = with_change_columns(typed, pipe.offset_col)
                 pipe.sink.merge(compact(events, pipe.pk_cols))
         finally:
-            raw.unpersist()
+            envelopes.unpersist()
 
     def dead_letters(self, raw: DataFrame) -> DataFrame:
         """Records that parsed to no known table (or not at all)."""
-        any_schema = next(iter(self.specs.values()))[0]
-        from mysql_postgres_debezium_cdc_spark.sources.debezium import decode_envelope
-
-        topic = "topic" if "topic" in raw.columns else None
-        decoded = decode_envelope(raw, any_schema, topic_col=topic)
         known = F.col("src_table").isin(*self.specs.keys())
-        return decoded.where(
+        return self._envelopes(raw).where(
             F.col("_error").isNotNull() | (~F.col("_tombstone") & ~F.coalesce(known, F.lit(False)))
         )
 

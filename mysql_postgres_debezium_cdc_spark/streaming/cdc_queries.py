@@ -180,15 +180,15 @@ def _events_changelog(spark: SparkSession, sf_dir: str, lo: int | None = None, h
     # real Kafka/Debezium source arrives already partitioned and skips
     # this (see sources.parquet.spread_small_scan).
     ev = spread_small_scan(ev)
-    # r13 (guide §5): the envelope-encode tree as ONE SQL string
-    # (scripts/ab_cdc_expr_r13.py: analyzed plans identical modulo ids).
+    # The envelope-encode tree as ONE SQL string (OPTIMIZATION_r13.md,
+    # change #12: one py4j round trip instead of one per operator).
     op = "CASE WHEN (event_type = 'error') THEN 'd' ELSE 'u' END"
     row_image = "STRUCT(user_id AS id, value AS v)"
     env = (
         f"STRUCT("
         f"CASE WHEN ({op} = 'd') THEN {row_image} END AS before, "
         f"CASE WHEN (NOT ({op} = 'd')) THEN {row_image} END AS after, "
-        f"STRUCT('app' AS db, 'user_state' AS table,"
+        f"STRUCT('app' AS db, 'user_state' AS `table`,"
         f" unix_millis(ts) AS ts_ms) AS source, "
         f"{op} AS op, "
         f"unix_millis(ts) AS ts_ms)"

@@ -510,3 +510,58 @@ def test_offset_range_diff_invariants(spark):
     assert diff == expected
     # unchanged keys never appear
     assert not [k for k in diff if k in at_t and k in at_end and at_t[k] == at_end[k] and diff[k][0] != "update"]
+
+
+def test_hyphenated_offset_column(spark):
+    """`with_change_columns` quotes the offset column, so a name that is
+    not a bare SQL identifier orders the batch like `offset` does."""
+    records = [
+        (env("u", {"id": 1, "name": "late", "created_ms": 1}), 5),
+        (env("c", {"id": 1, "name": "early", "created_ms": 1}), 1),
+    ]
+    raw = raw_df(spark, records).withColumnRenamed("offset", "kafka-offset")
+    events = with_change_columns(decode_envelope(raw, ROW_SCHEMA), "kafka-offset")
+    state = apply_changes(None, compact(events, ["id"]), ["id"], ["name", "created_ms"])
+    assert state_dict(state) == {1: "late"}
+
+
+@pytest.mark.parametrize(
+    "conf",
+    ["spark.sql.parser.escapedStringLiterals", "spark.sql.ansi.enforceReservedKeywords"],
+)
+def test_pipeline_independent_of_parser_confs(spark, tmp_path, conf):
+    """The decode/merge SQL strings mean the same under parser confs that
+    change how literals and keywords parse: the topic split has no
+    backslash escape, and `source.table` is backtick-quoted."""
+    records = [
+        (env("c", {"id": 1, "name": "a", "created_ms": 10}), 0),
+        (env("u", {"id": 1, "name": "b", "created_ms": 10}, wrap=True), 1),
+        (env("c", {"id": 2, "name": "x", "created_ms": 20}), 2),
+        (env("d", None, before={"id": 2, "name": "x", "created_ms": 20}), 3),
+        (env("c", {"id": 3, "name": "y", "created_ms": 30}), 4),
+        (None, 5),
+        ("{{{ not json", 6),
+    ]
+    raw = raw_df(spark, records)
+    # Blank out the envelope's own table so src_table must come from the topic.
+    no_table = raw_df(
+        spark, [(v.replace('"table": "customers"', '"table": null'), o) for v, o in records[:1]]
+    )
+
+    def replica(name):
+        pipe = CdcPipeline(
+            spark, ROW_SCHEMA, ["id"], ["name", "created_ms"], str(tmp_path / name)
+        )
+        pipe.process_batch(raw)
+        src = decode_envelope(no_table, ROW_SCHEMA).first()["src_table"]
+        return sorted(map(tuple, pipe.sink.read().collect())), src
+
+    default = replica("default")
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "true")
+    try:
+        under_conf = replica("conf")
+    finally:
+        spark.conf.set(conf, old)
+    assert default == ([(1, "b", 10, 1), (3, "y", 30, 4)], "customers")
+    assert under_conf == default

@@ -193,3 +193,20 @@ def test_encode_envelope_wire_shape(spark):
         encode_envelope(changes, "app", "customers", ("id",), wrap=True), schema
     )
     assert {r["op"] for r in dec.collect()} == {"c", "d"}
+
+
+def test_decode_replaces_reserved_input_columns(spark):
+    """A frame that already carries `_tombstone`/`_error` (e.g. one that
+    was decoded before) comes out with ONE column of each name, holding
+    the values this decode computed — not the stale input values."""
+    stale = _events(spark).selectExpr(
+        "*", "NOT (value IS NULL) AS _tombstone", "'stale' AS _error"
+    )
+    decoded = decode_envelope(stale, CUSTOMERS_SCHEMA, topic_col=None)
+    cols = decoded.columns
+    assert len(cols) == len(set(cols)), cols
+    assert "_env" not in cols
+    by_off = {r["offset"]: r for r in decoded.collect()}
+    assert all(by_off[o]["_tombstone"] is False for o in range(4))
+    assert by_off[4]["_tombstone"] is True
+    assert all(r["_error"] is None for r in by_off.values())

@@ -1360,3 +1360,101 @@ def test_stream_srm_readout_adds_no_exchange_for_sequential_verdict(spark):
     assert r.n_broadcast_joins == 0 and r.n_sortmerge_joins == 0, r.ops
     assert "BatchEvalPython" not in r.text
     spark.catalog.clearCache()
+
+
+def _cdc_frames(spark):
+    """Two-table Debezium batch (customers + orders, one wrapped, one
+    poison record, one tombstone) and the two row schemas."""
+    import json
+
+    from pyspark.sql import types as T
+
+    customers = T.StructType(
+        [T.StructField("id", T.LongType()), T.StructField("name", T.StringType())]
+    )
+    orders = T.StructType(
+        [T.StructField("id", T.LongType()), T.StructField("product", T.StringType())]
+    )
+
+    def mk(table, op, after, offset, wrap=False):
+        e = {"before": None, "after": after, "op": op, "ts_ms": 1,
+             "source": {"db": "app", "table": table, "ts_ms": 1}}
+        value = json.dumps({"payload": e} if wrap else e)
+        return (value, f"dbserver1.app.{table}", offset)
+
+    raw = spark.createDataFrame(
+        [
+            mk("customers", "c", {"id": 1, "name": "a"}, 0),
+            mk("orders", "c", {"id": 7, "product": "bolt"}, 1, wrap=True),
+            mk("customers", "u", {"id": 1, "name": "b"}, 2),
+            ("{{{ not json", "dbserver1.app.orders", 3),
+            (None, "dbserver1.app.orders", 4),
+        ],
+        "value string, topic string, offset long",
+    )
+    return raw, customers, orders
+
+
+def _from_json_sites(df) -> int:
+    return df._jdf.queryExecution().optimizedPlan().toString().count("from_json(")
+
+
+# One envelope tree: the payload-or-root COALESCE holds two CASE branches,
+# each with a wrapped and a bare parse.
+ENVELOPE_SITES = 4
+
+
+def test_cdc_decode_parses_envelope_once(spark):
+    """decode → change columns → compact keeps ONE copy of the envelope
+    parse: the `_error`/`op` filter pushed down by the optimizer reads
+    the attribute the decode's Generate produces instead of re-inlining
+    the from_json tree (a plain projection held five copies, 20 sites)."""
+    from mysql_postgres_debezium_cdc_spark.sources.debezium import decode_envelope
+    from mysql_postgres_debezium_cdc_spark.streaming.cdc import compact, with_change_columns
+
+    raw, customers, _ = _cdc_frames(spark)
+    events = with_change_columns(decode_envelope(raw, customers))
+    assert _from_json_sites(events) == ENVELOPE_SITES
+    assert _from_json_sites(compact(events, ["id"])) == ENVELOPE_SITES
+    plan = events._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("Generate explode(array(") == 1, plan
+
+
+def test_cdc_router_parses_envelope_once(spark, tmp_path, monkeypatch):
+    """A 2-table MultiTableCdcRouter batch decodes the envelope ONCE, with
+    the row images left as JSON text; each table's slice adds only the
+    from_json of its own before/after images, typed with its own schema."""
+    from mysql_postgres_debezium_cdc_spark.sources import debezium
+    from mysql_postgres_debezium_cdc_spark.sources.debezium import CdcConfig
+    from mysql_postgres_debezium_cdc_spark.streaming import cdc
+
+    raw, customers, orders = _cdc_frames(spark)
+    router = cdc.MultiTableCdcRouter(
+        spark,
+        CdcConfig(),
+        {"customers": (customers, ["name"]), "orders": (orders, ["product"])},
+        str(tmp_path),
+    )
+    decodes, slices = [], []
+
+    def spy(fn, log):
+        def wrapped(*args, **kwargs):
+            out = fn(*args, **kwargs)
+            log.append(out)
+            return out
+
+        return wrapped
+
+    monkeypatch.setattr(debezium, "decode_envelope", spy(debezium.decode_envelope, decodes))
+    monkeypatch.setattr(cdc, "with_change_columns", spy(cdc.with_change_columns, slices))
+    router.process_batch(raw)
+
+    assert len(decodes) == 1 and len(slices) == 2
+    (envelopes,) = decodes
+    assert envelopes.schema["after"].dataType.simpleString() == "string"
+    assert _from_json_sites(envelopes) == ENVELOPE_SITES
+    for frame, schema in zip(slices, (customers, orders)):
+        assert frame.schema["after"].dataType == schema
+        assert _from_json_sites(frame) == ENVELOPE_SITES + 2  # + before, after
+    assert {r["id"]: r["name"] for r in router.read_state("customers").collect()} == {1: "b"}
+    assert {r["id"]: r["product"] for r in router.read_state("orders").collect()} == {7: "bolt"}
